@@ -472,6 +472,8 @@ def unit_of(name: str) -> str:
         return "count"
     if name.endswith(".bytes"):
         return "bytes"
+    if name.endswith("_per_s"):
+        return "1/s"
     return "s" if name.endswith("_s") or name.startswith("op_tail_s") else ""
 
 
