@@ -10,7 +10,7 @@ The program under test only ever sees the files written here:
 - ``write_tables``: the ten parquet tables the registered queries read
   (TPC-H-ish star schema plus ``events``, ``documents`` and
   ``embeddings``), with the same column names, types and value domains
-  as the driver's fixtures, sized by a scale factor.
+  as the fixtures described in TESTDATA.md, sized by a scale factor.
 
 Same seed, same bytes: every draw comes from one ``numpy`` generator
 seeded by the caller, and the writers are deterministic.
