@@ -1,30 +1,28 @@
-"""Seeded input generators for the benchmark.
+"""Seeded input generator for the ``ventas_pipeline`` workload.
 
-The program under test only ever sees the files written here:
+``write_ventas`` writes a UCI-Online-Retail-shaped ``ventas.csv``
+(InvoiceDate, StockCode, Country, Quantity): Zipf-popular stock codes
+sold in every one of twenty country stores over 104 weeks, a share of
+unparsable ``Quantity`` cells and of negative (return) rows, so the
+pipeline's coercion, cleaning and admission gates all see work. The
+shape follows the reference-size input the workload is scaled from
+(2 M rows, 2,000 codes x 20 stores, about 50 rows per series, 39,050
+of 40,000 series admitted): rows and codes are scaled down together,
+so rows per series and the admitted share stay those of the reference.
 
-- ``write_ventas``: a UCI-Online-Retail-shaped ``ventas.csv``
-  (InvoiceDate, StockCode, Country, Quantity) with Zipf-popular stock
-  codes, a share of unparsable ``Quantity`` cells and of negative
-  (return) rows, so the pipeline's coercion, cleaning and admission
-  gates all see work.
-- ``write_tables``: the ten parquet tables the registered queries read
-  (TPC-H-ish star schema plus ``events``, ``documents`` and
-  ``embeddings``), with the same column names, types and value domains
-  as the fixtures described in TESTDATA.md, sized by a scale factor.
+The query workload needs no generator: it reads the fixed fixture
+tables under ``perfbench/fixtures``.
 
 Same seed, same bytes: every draw comes from one ``numpy`` generator
-seeded by the caller, and the writers are deterministic.
+seeded by the caller, and the writer is deterministic.
 """
 
 from __future__ import annotations
 
-import json
 import os
 
 import numpy as np
 import pandas as pd
-import pyarrow as pa
-import pyarrow.parquet as pq
 
 # The twenty most frequent countries of the UCI Online Retail set.
 COUNTRIES = (
@@ -38,9 +36,15 @@ VENTAS_START = np.datetime64("2009-12-07T00:00:00")
 VENTAS_WEEKS = 104
 
 
-def ventas_frame(seed: int, rows: int, codes: int, zipf_s: float = 1.05,
+def ventas_frame(seed: int, rows: int, codes: int, zipf_s: float = 1.05, store_s: float = 0.8,
                  garbage_share: float = 0.002, negative_share: float = 0.01) -> pd.DataFrame:
-    """The ventas rows as strings, exactly as they are written."""
+    """The ventas rows as strings, exactly as they are written.
+
+    Each row's stock code is Zipf-popular (exponent ``zipf_s``) and its
+    store falls off as rank ** -``store_s``, independently, so every
+    code sells in every store and the rarest code-store pairs are the
+    series that fail the >= 12-week / >= 10-unit gates (about 2 % of
+    them at 50 rows per series, as in the reference)."""
     rng = np.random.default_rng(seed)
     ranks = np.arange(1, codes + 1, dtype=np.float64)
     code_p = ranks ** -zipf_s
@@ -49,18 +53,10 @@ def ventas_frame(seed: int, rows: int, codes: int, zipf_s: float = 1.05,
     code_names = np.array([f"{20000 + i}{'ABC'[i % 3] if i % 7 == 0 else ''}"
                            for i in rng.permutation(codes)])
     code_idx = rng.choice(codes, size=rows, p=code_p)
-    # per-code store mix: each code sells in a few stores, mostly the
-    # first countries, so the series count is well below codes x stores
-    country_p = np.arange(1, len(COUNTRIES) + 1, dtype=np.float64) ** -0.6
+    country_p = np.arange(1, len(COUNTRIES) + 1, dtype=np.float64) ** -store_s
     country_p /= country_p.sum()
     country_idx = rng.choice(len(COUNTRIES), size=rows, p=country_p)
-    # each code lives for a random window of the 104 weeks, so the
-    # rarest codes give short series that fail the 12-week gate
-    life_start = rng.integers(0, VENTAS_WEEKS - 8, size=codes)
-    life_len = rng.integers(8, VENTAS_WEEKS + 1, size=codes)
-    life_end = np.minimum(life_start + life_len, VENTAS_WEEKS)
-    span = life_end[code_idx] - life_start[code_idx]
-    week = life_start[code_idx] + (rng.random(rows) * span).astype(np.int64)
+    week = rng.integers(0, VENTAS_WEEKS, size=rows)
     minute = week * 7 * 1440 + rng.integers(0, 7, size=rows) * 1440 + rng.integers(480, 1200, size=rows)
     ts = VENTAS_START + minute.astype("timedelta64[m]")
     qty = rng.geometric(0.12, size=rows).clip(1, 480)
@@ -83,160 +79,3 @@ def write_ventas(path: str, seed: int, rows: int, codes: int) -> pd.DataFrame:
     os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
     df.to_csv(path, index=False, lineterminator="\n")
     return df
-
-
-# ---------------------------------------------------------------- tables
-
-_WORDS = (
-    "a the data spark query row column table join group filter sort merge "
-    "hash scan agg window stream batch key value order line part customer "
-    "vector big small fast slow"
-).split()
-_LANGS = ("en", "fr", "es", "zh", "de")
-_LANG_P = (0.4, 0.15, 0.15, 0.15, 0.15)
-_PART_ADJ = ("blue", "cold", "hot", "large", "new", "old", "red", "small")
-_PART_NOUN = ("anvil", "bolt", "gear", "gizmo", "plate", "ring", "rod", "widget")
-_PART_TYPES = ("ECONOMY", "PROMO", "LARGE", "MEDIUM", "STANDARD", "SMALL")
-_SEGMENTS = ("FURNITURE", "MACHINERY", "BUILDING", "HOUSEHOLD", "AUTOMOBILE")
-_PRIORITIES = ("1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW")
-_EVENT_TYPES = ("view", "click", "purchase", "signup", "error")
-_REGIONS = ("AFRICA", "AMERICA", "ASIA", "EUROPE", "MIDDLE EAST")
-_DAY_US = 86_400_000_000
-
-
-def _ts(start: str, micros: np.ndarray) -> pa.Array:
-    base = np.datetime64(start, "us").astype(np.int64)
-    return pa.array(base + micros, type=pa.timestamp("us"))
-
-
-def _money(rng: np.random.Generator, lo: float, hi: float, n: int) -> np.ndarray:
-    return np.round(rng.uniform(lo, hi, n), 2)
-
-
-def _documents(rng: np.random.Generator, n: int) -> dict:
-    texts: list[str] = []
-    # exactly 5% near-duplicates, so every seed has the same dedup load
-    dups = set(rng.choice(np.arange(11, n), size=n // 20, replace=False).tolist())
-    for i in range(n):
-        if i in dups:
-            # near-duplicate of an earlier document: drop the last
-            # token and tag it, as the fixtures' dedup targets are
-            src = texts[int(rng.integers(0, i))].split()
-            texts.append(" ".join(src[:-1] + ["dup"] * int(rng.integers(1, 4))))
-        else:
-            k = int(rng.integers(10, 101))
-            texts.append(" ".join(rng.choice(_WORDS, size=k)))
-    return {
-        "doc_id": pa.array(np.arange(n, dtype=np.int64)),
-        "text": pa.array(texts),
-        "lang": pa.array(rng.choice(_LANGS, size=n, p=_LANG_P)),
-        "source": pa.array([f"src{i % 20}" for i in range(n)]),
-        "n_chars": pa.array(np.array([len(t) for t in texts], dtype=np.int64)),
-    }
-
-
-def table_columns(seed: int, sf: float) -> dict[str, dict]:
-    """Column arrays for every table at scale factor ``sf``
-    (sf 0.001: 6,000 lineitem rows; sizes scale linearly, except the
-    corpus tables, which scale as the fixtures do)."""
-    rng = np.random.default_rng(seed)
-    n_cust = max(150, int(150_000 * sf))
-    n_supp = max(10, int(10_000 * sf))
-    n_part = max(200, int(200_000 * sf))
-    n_ord = max(1500, int(1_500_000 * sf))
-    n_events = max(1000, int(1_000_000 * sf))
-    n_users = max(15, int(15_000 * sf))
-    n_docs = max(500, int(50_000 * sf))
-    n_vecs = max(500, int(20_000 * sf))
-
-    t: dict[str, dict] = {}
-    t["region"] = {
-        "r_regionkey": pa.array(np.arange(5, dtype=np.int32)),
-        "r_name": pa.array(list(_REGIONS)),
-    }
-    t["nation"] = {
-        "n_nationkey": pa.array(np.arange(25, dtype=np.int32)),
-        "n_name": pa.array([f"NATION_{i}" for i in range(25)]),
-        "n_regionkey": pa.array((np.arange(25) % 5).astype(np.int32)),
-    }
-    t["customer"] = {
-        "c_custkey": pa.array(np.arange(n_cust, dtype=np.int64)),
-        "c_name": pa.array([f"Customer#{i:09d}" for i in range(n_cust)]),
-        "c_nationkey": pa.array(rng.integers(0, 25, n_cust).astype(np.int32)),
-        "c_acctbal": pa.array(_money(rng, -999.99, 9999.99, n_cust)),
-        "c_mktsegment": pa.array(rng.choice(_SEGMENTS, size=n_cust)),
-    }
-    t["supplier"] = {
-        "s_suppkey": pa.array(np.arange(n_supp, dtype=np.int64)),
-        "s_name": pa.array([f"Supplier#{i:09d}" for i in range(n_supp)]),
-        "s_nationkey": pa.array(rng.integers(0, 25, n_supp).astype(np.int32)),
-        "s_acctbal": pa.array(_money(rng, -999.99, 9999.99, n_supp)),
-    }
-    retail = np.round(900.0 + (np.arange(n_part) % 200) * 0.1, 2)
-    t["part"] = {
-        "p_partkey": pa.array(np.arange(n_part, dtype=np.int64)),
-        "p_name": pa.array([f"{a} {b}" for a, b in zip(
-            rng.choice(_PART_ADJ, size=n_part), rng.choice(_PART_NOUN, size=n_part))]),
-        "p_brand": pa.array([f"Brand#{i}" for i in rng.integers(1, 26, n_part)]),
-        "p_type": pa.array(rng.choice(_PART_TYPES, size=n_part)),
-        "p_size": pa.array(rng.integers(1, 51, n_part).astype(np.int32)),
-        "p_retailprice": pa.array(retail),
-    }
-    span_days = 2404  # 1995-01-01 .. 2001-08-01
-    o_days = rng.integers(0, span_days, n_ord)
-    t["orders"] = {
-        "o_orderkey": pa.array(np.arange(n_ord, dtype=np.int64)),
-        "o_custkey": pa.array(rng.integers(0, n_cust, n_ord).astype(np.int64)),
-        "o_orderstatus": pa.array(rng.choice(("F", "O", "P"), size=n_ord)),
-        "o_totalprice": pa.array(_money(rng, 1000.0, 500_000.0, n_ord)),
-        "o_orderdate": _ts("1995-01-01", o_days * _DAY_US),
-        "o_orderpriority": pa.array(rng.choice(_PRIORITIES, size=n_ord)),
-    }
-    lines = rng.integers(1, 8, n_ord)
-    n_li = int(lines.sum())
-    l_order = np.repeat(np.arange(n_ord, dtype=np.int64), lines)
-    l_lineno = (np.arange(n_li) - np.repeat(np.cumsum(lines) - lines, lines) + 1).astype(np.int32)
-    part = rng.integers(0, n_part, n_li).astype(np.int64)
-    qty = rng.integers(1, 51, n_li).astype(np.float64)
-    t["lineitem"] = {
-        "l_orderkey": pa.array(l_order),
-        "l_partkey": pa.array(part),
-        "l_suppkey": pa.array(rng.integers(0, n_supp, n_li).astype(np.int64)),
-        "l_linenumber": pa.array(l_lineno),
-        "l_quantity": pa.array(qty),
-        "l_extendedprice": pa.array(np.round(qty * retail[part] * rng.uniform(0.02, 2.4, n_li), 2)),
-        "l_discount": pa.array(rng.integers(0, 11, n_li) / 100.0),
-        "l_tax": pa.array(rng.integers(0, 9, n_li) / 100.0),
-        "l_returnflag": pa.array(rng.choice(("N", "A", "R"), size=n_li)),
-        "l_linestatus": pa.array(rng.choice(("O", "F"), size=n_li)),
-        "l_shipdate": _ts("1995-01-02", rng.integers(0, span_days + 90, n_li) * _DAY_US),
-    }
-    ev_us = np.sort(rng.integers(0, 30 * _DAY_US, n_events))
-    t["events"] = {
-        "event_id": pa.array(np.arange(n_events, dtype=np.int64)),
-        "ts": _ts("2024-01-01", ev_us),
-        "user_id": pa.array(rng.integers(0, n_users, n_events).astype(np.int64)),
-        "event_type": pa.array(rng.choice(_EVENT_TYPES, size=n_events)),
-        "value": pa.array(np.round(rng.exponential(50.0, n_events), 2)),
-        "props": pa.array([json.dumps({"k": int(k)}) for k in rng.integers(0, 100, n_events)]),
-    }
-    t["documents"] = _documents(rng, n_docs)
-    vec = rng.normal(size=(n_vecs, 64)).astype(np.float32)
-    vec /= np.linalg.norm(vec, axis=1, keepdims=True)
-    t["embeddings"] = {
-        "vec_id": pa.array(np.arange(n_vecs, dtype=np.int64)),
-        "embedding": pa.array(list(vec), type=pa.list_(pa.float32())),
-        "label": pa.array(rng.integers(0, 10, n_vecs).astype(np.int32)),
-    }
-    return t
-
-
-def write_tables(sf_dir: str, seed: int, sf: float) -> dict[str, int]:
-    """Write every table as ``<sf_dir>/<name>.parquet``; returns row counts."""
-    os.makedirs(sf_dir, exist_ok=True)
-    counts = {}
-    for name, cols in table_columns(seed, sf).items():
-        table = pa.table(cols)
-        pq.write_table(table, os.path.join(sf_dir, f"{name}.parquet"))
-        counts[name] = table.num_rows
-    return counts

@@ -1,22 +1,26 @@
 """Benchmark runner: one workload, one seed, one process.
 
-    python3 perfbench/run.py --workload ventas_pipeline --seed 1 --seconds 20 --trace 0
+    python3 perfbench/run.py --workload ventas_pipeline --seed 1 --seconds 12 --trace 0
 
-Runs from the repository root. It generates the workload's inputs
-from the seed, starts Spark through the package's own session builder
-(``local[N]``, N = the CPUs this process may use, or
-``SPARK_GRAFT_CPUS``), runs one untimed warm-up pass, then runs ops in
-a closed loop (one client, one op at a time, in a seed-permuted order
-per pass) until the timed op walls add up to ``--seconds`` and at
-least one full pass is done. Each op's output is checked after its
-timed region.
+Runs from the repository root. It prepares the workload's inputs
+(``ventas.csv`` generated from the seed; the query workload reads fixed
+fixture tables and uses the seed only for the op order), starts Spark
+through the package's own session builder (``local[N]``, N = the CPUs
+this process may use, or ``SPARK_GRAFT_CPUS``), runs untimed warm-up
+ops, then runs ops in a closed loop (one client, one op at a time, in a
+seed-permuted order per pass) until the timed op walls add up to
+``--seconds`` and at least one full pass is done. Each op's output is
+checked after its timed region.
 
-``--trace 0`` prints the end-to-end metrics; ``--trace 1`` runs every
-op both plain and traced (spans around the calls into each layer, job
-groups, the Spark event log) and prints the per-layer metrics and the
-tracing overhead. The last stdout line is a compact JSON summary; the
-full run record with every op goes to
-``perfbench/.work/results/<workload>-seed<seed>-trace<t>.json``.
+``--trace 0`` prints the end-to-end metrics. ``setup_s`` is the median
+of three set-ups (package import, ``get_spark``, registry import,
+binding the workload): this process's own and two in fresh probe
+processes started before it, each of which ends its JVM before the
+next begins. ``--trace 1`` runs every op both plain and traced (spans
+around the calls into each layer, job groups, the Spark event log) and
+prints the per-layer metrics and the tracing overhead. The last stdout
+line is a compact JSON summary; the full run record with every op goes
+to ``perfbench/.work/results/<workload>-seed<seed>-trace<t>.json``.
 
 Everything the run writes (inputs, Spark scratch space, event log,
 temporary files) stays under ``perfbench/.work``.
@@ -24,29 +28,29 @@ temporary files) stays under ``perfbench/.work``.
 
 from __future__ import annotations
 
+import argparse
+import json
+import os
+import platform
+import random
+import shutil
+import signal
+import statistics
+import subprocess
+import sys
+import tempfile
+import threading
 import time
-
-T0 = time.perf_counter()
-
-import argparse  # noqa: E402
-import json  # noqa: E402
-import os  # noqa: E402
-import platform  # noqa: E402
-import random  # noqa: E402
-import shutil  # noqa: E402
-import signal  # noqa: E402
-import statistics  # noqa: E402
-import sys  # noqa: E402
-import tempfile  # noqa: E402
-import threading  # noqa: E402
-from contextlib import nullcontext  # noqa: E402
-from pathlib import Path  # noqa: E402
+from contextlib import nullcontext
+from pathlib import Path
 
 HERE = Path(__file__).resolve().parent
 ROOT = HERE.parent
 PACKAGE = "dataframe_retail_e_inventarios_spark"
 METHODOLOGY = "noop-v1"
 OP_TIMEOUT_S = 60.0
+# set-ups per measured run: this process and two probe processes
+SETUP_SAMPLES = 3
 DRIVER_MEM = "2g"
 
 E2E_METRICS = {
@@ -274,18 +278,21 @@ def run_op(wl, spark, name: str, op_id: str, tracer) -> dict:
     watchdog = threading.Timer(OP_TIMEOUT_S, cancel)
     watchdog.start()
     error, handle = None, None
+    wl.untimed_s = 0.0
     t = time.perf_counter()
     try:
         with tracer.span("op", op=op_id, query=name) if tracer else nullcontext():
             handle = wl.run_op(spark, name, tracer)
     except Exception as e:  # an op that raises is a failed op
         error = f"raised {e!r}"[:300]
-    wall = time.perf_counter() - t
+    # the workload's own bookkeeping inside the op is not the program's time
+    wall = time.perf_counter() - t - wl.untimed_s
     watchdog.cancel()
     sc.removeJobTag(op_id)
     if fired.is_set():
         error = f"timed out after {OP_TIMEOUT_S:.0f} s"
     reason = error
+    t_check = time.perf_counter()
     if error is None:
         try:
             with tracer.span("verify", op=op_id) if tracer else nullcontext():
@@ -293,7 +300,7 @@ def run_op(wl, spark, name: str, op_id: str, tracer) -> dict:
         except Exception as e:  # a check that cannot run fails the op
             reason = f"check raised {e!r}"[:300]
     rec = {"op": op_id, "name": name, "wall_s": wall, "traced": tracer is not None,
-           "ok": reason is None, "reason": reason}
+           "ok": reason is None, "reason": reason, "check_s": time.perf_counter() - t_check}
     if handle is not None:
         rec.update(wl.extra(name, handle))
     return rec
@@ -381,7 +388,8 @@ def layer_metrics(ops: list[dict], spans: list[dict], totals: dict, n_cpus: int)
             continue
         mine = [s for s in by_op.get(o["op"], []) if s["name"] != "verify"]
         root = next(s for s in mine if s["name"] == "op")
-        o["wall_s"] = root["end"] - root["start"]
+        o["wall_s"] = root["end"] - root["start"] - sum(
+            s["end"] - s["start"] for s in mine if s["name"].startswith("bench."))
         for field in SPAN_FIELDS.values():
             o[f"{field}_s"] = 0.0
         o["sources.load_table.calls"] = 0
@@ -486,6 +494,52 @@ def summary_line(correct: bool, ops: list[dict], metrics: dict, units: dict) -> 
     }, separators=(",", ":"))
 
 
+def start(wl, workload: str, n_cpus: int):
+    """The program's set-up, timed: package import, ``get_spark``,
+    ``registry.queries()`` import, and binding the workload to the
+    session. Returns the session and the three times."""
+    t0 = time.perf_counter()
+    from dataframe_retail_e_inventarios_spark.session import get_spark
+
+    spark = get_spark(f"perfbench-{workload}", cpus=n_cpus)
+    get_spark_s = time.perf_counter() - t0
+    spark.sparkContext.setLogLevel("ERROR")
+    t = time.perf_counter()
+    from dataframe_retail_e_inventarios_spark.registry import queries
+
+    queries()
+    import_s = time.perf_counter() - t
+    wl.bind(spark)
+    return spark, get_spark_s, import_s, time.perf_counter() - t0
+
+
+def setup_probe(args, work: Path) -> float:
+    """One set-up in a fresh process (``--setup-probe``), which ends
+    its JVM before it exits; returns its set-up time."""
+    cmd = [sys.executable, str(Path(__file__).resolve()), "--workload", args.workload,
+           "--seed", str(args.seed), "--seconds", "0", "--setup-probe", str(work)]
+    out = subprocess.run(cmd, cwd=ROOT, capture_output=True, text=True, timeout=OP_TIMEOUT_S * 2)
+    if out.returncode != 0:
+        raise RuntimeError(f"set-up probe failed:\n{out.stderr[-2000:]}")
+    return float(out.stdout.strip().splitlines()[-1])
+
+
+def probe_main(args) -> int:
+    from workloads import WORKLOADS
+
+    work = Path(args.setup_probe)
+    stop_on_sigterm(work)
+    try:
+        prepare_env(work, trace=False)
+        setup_s = start(WORKLOADS[args.workload](), args.workload, cpus())[3]
+    finally:
+        # the probe ran nothing: its JVM is terminated, not stopped
+        reap_descendants()
+        shutil.rmtree(work, ignore_errors=True)
+    print(setup_s)
+    return 0
+
+
 def parse_args(argv):
     from workloads import WORKLOADS
 
@@ -494,21 +548,37 @@ def parse_args(argv):
     p.add_argument("--seed", type=int, required=True)
     p.add_argument("--seconds", type=float, required=True)
     p.add_argument("--trace", type=int, choices=(0, 1), default=0)
+    p.add_argument("--setup-probe", metavar="WORKDIR", help=argparse.SUPPRESS)
     return p.parse_args(argv)
 
 
+def stop_on_sigterm(work: Path) -> None:
+    """A terminated run stops every process it started (the JVM, probe
+    processes and theirs), waits for them, removes its scratch space
+    and exits. Raising out of the signal handler instead can leave the
+    Py4J client mid-call and the clean-up deadlocked on it."""
+
+    def terminate(*_):
+        reap_descendants()
+        shutil.rmtree(work, ignore_errors=True)
+        os._exit(143)
+
+    signal.signal(signal.SIGTERM, terminate)
+
+
 def main(argv=None) -> int:
-    # a terminated run still stops Spark and cleans up (the finally below)
-    signal.signal(signal.SIGTERM, lambda *_: sys.exit(143))
     sys.path.insert(0, str(HERE))
     args = parse_args(argv)
     if not (ROOT / PACKAGE / "__init__.py").is_file():
         print(f"package {PACKAGE} not found under {ROOT}", file=sys.stderr)
         return 2
+    if args.setup_probe:
+        return probe_main(args)
     from workloads import WORKLOADS
 
     wl = WORKLOADS[args.workload]()
     work = HERE / ".work" / f"{args.workload}-seed{args.seed}-trace{args.trace}-{os.getpid()}"
+    stop_on_sigterm(work)
     results_dir = HERE / ".work" / "results"
     results_dir.mkdir(parents=True, exist_ok=True)
     load_before, cpu_before = os.getloadavg(), cpu_times()
@@ -519,32 +589,29 @@ def main(argv=None) -> int:
         t = time.perf_counter()
         inputs = wl.prepare(str(work / "inputs"), args.seed)
         gen_s = time.perf_counter() - t
+        # the other set-up samples, each in a fresh process, before this
+        # process starts its own JVM
+        setups = [] if args.trace else [setup_probe(args, work / f"probe{i}")
+                                        for i in range(SETUP_SAMPLES - 1)]
 
         sampler.start()
-        t = time.perf_counter()
-        from dataframe_retail_e_inventarios_spark.session import get_spark
-
         n_cpus = cpus()
-        spark = get_spark(f"perfbench-{args.workload}", cpus=n_cpus)
-        get_spark_s = time.perf_counter() - t
-        spark.sparkContext.setLogLevel("ERROR")
-        t = time.perf_counter()
-        from dataframe_retail_e_inventarios_spark.registry import queries
+        spark, get_spark_s, import_s, setup_own = start(wl, args.workload, n_cpus)
+        setups.insert(0, setup_own)
+        setup_s = statistics.median(setups)
 
-        queries()
-        import_s = time.perf_counter() - t
-        wl.bind(spark)
-
-        tracer, undo = None, []
+        tracer = None
         if args.trace:
             from tracing import Tracer
 
             tracer = Tracer(spark.sparkContext)
             undo = wl.install(tracer)
+        ready = time.perf_counter()
         ops, first = measure(wl, spark, args.seconds, args.seed, tracer)
-        setup_s = first - T0 - gen_s
-        for u in undo:
-            u()
+        warmup_s = first - ready
+        if tracer is not None:
+            for u in undo:
+                u()
         versions = {
             "spark": spark.version,
             "python": platform.python_version(),
@@ -564,6 +631,7 @@ def main(argv=None) -> int:
             units = LAYER_METRICS
         else:
             metrics, detail = end_to_end(ops, setup_s, sampler.peak_bytes)
+            detail["warmup_s"] = warmup_s
             units = E2E_METRICS
     finally:
         if spark is not None:
@@ -590,6 +658,8 @@ def main(argv=None) -> int:
         "git_commit": git_commit(),
         "inputs": inputs,
         "input_gen_s": gen_s,
+        "setup_samples_s": setups,
+        "warmup_s": warmup_s,
         "session.get_spark_s": get_spark_s,
         "registry.import_s": import_s,
         "metrics": metrics,

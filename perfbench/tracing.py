@@ -70,14 +70,19 @@ class Tracer:
 
     def install(self, package: str, module: str, func: str, span_name: str, key=None):
         """Time every call of ``<package>.<module>.<func>`` under
-        ``span_name``, in every loaded package module that bound it.
-        ``key(args, kwargs)`` names the touched source, so the first
+        ``span_name``, in every loaded package module that bound it;
+        calls made while no span is open go straight through, so the
+        plain ops of a traced run carry no tracing cost. ``key(args,
+        kwargs)`` names the touched source, so the first
         touch in the process is marked ``cold``. Returns an undo."""
         orig = getattr(sys.modules[f"{package}.{module}"], func)
         seen: set = set()
 
         @functools.wraps(orig)
         def timed(*args, **kwargs):
+            if not self._stack:
+                # outside a traced op (the plain ops of a traced run)
+                return orig(*args, **kwargs)
             attrs = {}
             if key is not None:
                 k = key(args, kwargs)

@@ -14,32 +14,38 @@ from __future__ import annotations
 import glob
 import os
 import statistics
+import time
 from contextlib import nullcontext
+
+import pyarrow.parquet as pq
 
 import gen
 
 PACKAGE = "dataframe_retail_e_inventarios_spark"
 
-# Registered queries at bench scale (sf0.1): three CURVE queries of the
-# repository's original bench, chosen to cover the layers a query's
-# time sits in (a one-table scan, a six-table join, an Arrow UDF). At
-# smoke scale (sf0.001) the same ops are fixed-cost bound and their
-# run-to-run spread on a shared 4-CPU VM was ~25%; at sf0.1 execution
-# is about half of each op and the spread is smaller, while table
-# resolution, build and planning still show. Two warm-up passes and
-# the output checks are what fits one run: dedup_minhash_lsh (eager
-# checkpoint jobs) was measured here too, but its op and its oracle
-# check took a third of a run and it was the noisiest op.
+# Registered queries at bench scale, read from the fixed sf0.1 fixture
+# tables (byte copies of the ones TESTDATA.md describes, kept in
+# ``perfbench/fixtures/sf0.1``): three queries of the repository's
+# original bench, chosen to cover the layers a query's time sits in (a
+# one-table scan, a six-table join, an Arrow UDF). At smoke scale
+# (sf0.001) the same ops are fixed-cost bound and their run-to-run
+# spread on a shared 4-CPU VM was ~25%; at sf0.1 execution is about
+# half of each op and the spread is smaller, while table resolution,
+# build and planning still show. dedup_minhash_lsh (eager checkpoint
+# jobs) was measured here too, but its op and its oracle check took a
+# third of a run and it was the noisiest op.
 QUERIES = [
     "tpch_pricing_summary",
     "volume_shipping_nation_pairs",
     "semantic_dedup_signature",
 ]
+FIXTURES = os.path.join(os.path.dirname(os.path.abspath(__file__)), "fixtures", "sf0.1")
 
-# ventas.csv size: 100,000 rows over 300 Zipf-popular stock codes and
-# 20 stores (about 5,700 series, 3,700 of them admitted).
+# ventas.csv size: 100,000 rows over 100 Zipf-popular stock codes and
+# 20 stores (2,000 series of about 50 rows, about 98% of them admitted),
+# the reference-size input's shape scaled down 20x.
 VENTAS_ROWS = 100_000
-VENTAS_CODES = 300
+VENTAS_CODES = 100
 
 REPORT_STAMP = "2026-01-01 00:00:00"
 MA_TOL = 5e-5 + 1e-9
@@ -71,23 +77,36 @@ def plan_step(tracer, df) -> None:
 
 
 class QueryWorkload:
-    """Registered queries at bench scale, one op per query."""
+    """Registered queries at bench scale, one op per query.
+
+    Every op's output is checked through a digest computed during the
+    op's own execution: the DataFrame is observed (``Observation``) for
+    its row count and the sum of ``xxhash64`` over every row, which is
+    order-insensitive and costs one hash per output row. The first op
+    of a query in a run is certified outside the timed region: the same
+    query is collected under a second observation and compared with its
+    DuckDB oracle, and the op's digest must equal the collected rows'
+    digest. Every later op's digest must equal the certified one, so a
+    result that goes wrong only on repeated executions fails its op."""
 
     name = "queries_sf0.1"
-    sf = 0.1
-    warmup_passes = 2
+    warmup_passes = 1
+    # seconds of benchmark work inside the last op (the observation),
+    # taken out of its wall
+    untimed_s = 0.0
 
     def __init__(self, queries: dict | None = None):
         # ``queries`` overrides registry lookups (the self-test plants
-        # a wrong result this way)
+        # wrong results this way)
         self._override = queries or {}
         self.names = list(QUERIES)
-        self._verdict: dict[str, str | None] = {}
+        self.sf_dir = FIXTURES
+        self._certified: dict[str, tuple] = {}
 
     def prepare(self, work: str, seed: int) -> dict:
-        self.sf_dir = os.path.join(work, "sf")
-        counts = gen.write_tables(self.sf_dir, seed, self.sf)
-        return {"tables": counts, "queries": self.names, "scale_factor": self.sf}
+        rows = {f[:-len(".parquet")]: pq.ParquetFile(os.path.join(self.sf_dir, f)).metadata.num_rows
+                for f in sorted(os.listdir(self.sf_dir)) if f.endswith(".parquet")}
+        return {"tables": rows, "queries": self.names, "fixtures": "perfbench/fixtures/sf0.1"}
 
     def bind(self, spark) -> None:
         from dataframe_retail_e_inventarios_spark.registry import oracle_sql, queries
@@ -100,33 +119,65 @@ class QueryWorkload:
         return [tracer.install(PACKAGE, "sources.readers", "load_table",
                                "sources.load_table", key=lambda a, k: (a[1], a[2]))]
 
+    @staticmethod
+    def observed(df):
+        """``df`` with a digest observation: its row count and the sum
+        of every row's ``xxhash64`` (as a decimal, so it cannot
+        overflow)."""
+        import pyspark.sql.functions as F
+        from pyspark.sql import Observation
+
+        obs = Observation()
+        digest = F.sum(F.xxhash64(*[F.col(c) for c in df.columns]).cast("decimal(38,0)"))
+        return df.observe(obs, F.count(F.lit(1)).alias("rows"), digest.alias("digest")), obs
+
     def run_op(self, spark, name: str, tracer):
-        if tracer is None:
-            self.fns[name](spark, self.sf_dir).write.format("noop").mode("overwrite").save()
-            return None
-        with tracer.span("plans.build"):
+        with span(tracer, "plans.build"):
             df = self.fns[name](spark, self.sf_dir)
-        plan_step(tracer, df)
-        with tracer.span("spark.exec"):
+        t = time.perf_counter()
+        with span(tracer, "bench.observe"):
+            df, obs = self.observed(df)
+        self.untimed_s = time.perf_counter() - t
+        if tracer is not None:
+            plan_step(tracer, df)
+        with span(tracer, "spark.exec"):
             df.write.format("noop").mode("overwrite").save()
+        return obs
+
+    def check(self, spark, name: str, obs) -> str | None:
+        got = (obs.get["rows"], obs.get["digest"])
+        if name not in self._certified:
+            reason, digest = self.certify(spark, name)
+            if reason is not None:
+                return reason
+            self._certified[name] = digest
+        if got != self._certified[name]:
+            return (f"output digest {got} differs from the oracle-certified "
+                    f"{self._certified[name]}")
         return None
 
-    def check(self, spark, name: str, handle) -> str | None:
-        """Each query's output is a function of the inputs alone, so it
-        is compared with its oracle once per run; every op of a query
-        whose comparison failed counts as failed."""
-        if name not in self._verdict:
-            from dataframe_retail_e_inventarios_spark.testing import compare_query
+    def certify(self, spark, name: str) -> tuple[str | None, tuple | None]:
+        """Collect the query once more under an observation, compare
+        the rows with the DuckDB oracle, and return the digest of the
+        rows that passed."""
+        from dataframe_retail_e_inventarios_spark.testing import compare_query
 
-            try:
-                r = compare_query(spark, name, self.fns[name], self.oracles[name], self.sf_dir)
-                self._verdict[name] = None if r.ok else "; ".join(r.issues[:3]) or "mismatch"
-            except Exception as e:  # a failing check is a failed op, not a crash
-                self._verdict[name] = f"check raised {e!r}"[:300]
-        return self._verdict[name]
+        seen = {}
 
-    def extra(self, name: str, handle) -> dict:
-        return {}
+        def collected(spark, sf_dir):
+            df, seen["obs"] = self.observed(self.fns[name](spark, sf_dir))
+            return df
+
+        try:
+            r = compare_query(spark, name, collected, self.oracles[name], self.sf_dir)
+        except Exception as e:  # a failing check is a failed op, not a crash
+            return f"check raised {e!r}"[:300], None
+        if not r.ok:
+            return "; ".join(r.issues[:3]) or "mismatch", None
+        return None, (seen["obs"].get["rows"], seen["obs"].get["digest"])
+
+    def extra(self, name: str, obs) -> dict:
+        return {"rows": obs.get["rows"]}
 
 
 class VentasWorkload:
@@ -135,6 +186,7 @@ class VentasWorkload:
     name = "ventas_pipeline"
     names = ["pipeline"]
     warmup_passes = 3
+    untimed_s = 0.0
 
     def prepare(self, work: str, seed: int) -> dict:
         self.work = work
