@@ -10,8 +10,9 @@ where built-in operators genuinely cannot express the semantics
 
 Layout:
     session    SparkSession builder (AQE, Arrow, tuned shuffle partitions)
-    schemas    explicit StructTypes for every table
-    sources/   readers (csv-with-schema, parquet, testdata) and writers
+    schemas    explicit StructTypes for the CSV tables
+    sources/   readers (csv-with-schema, parquet, testdata tables with
+               schemas resolved once per file) and writers
     operators/ relational building blocks (cleaning, resample, winsorize,
                split, joins, dedup, similarity, textops, multimodal)
     functions/ column-expression builders (metrics, inventory, arrays,

@@ -24,7 +24,7 @@ from ..operators.dq import (
     union_audits,
 )
 from ..registry import register
-from ..sources.readers import load_table
+from ..sources.readers import load_table, read_raw_table
 
 
 def q_dq_constraint_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -392,12 +392,14 @@ def q_dataset_stats_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     the fingerprint both engines emit is md5 of the comma-joined
     names, so the oracle match certifies contract == reality. One
     count(*) scan per table (parquet row-group metadata — no column
-    IO); the union is 10 one-row plans."""
+    IO); the union is 10 one-row plans. The raw column lists come from
+    the memoized table resolver, so a build runs no schema job once
+    each file has been resolved."""
     import hashlib
 
     parts = []
     for t, expected in _MANIFEST_COLS.items():
-        df = spark.read.parquet(f"{sf_dir}/{t}.parquet")
+        df = read_raw_table(spark, sf_dir, t)
         if list(df.columns) != expected:
             raise ValueError(
                 f"dataset_stats_manifest: {t} schema drift — expected "

@@ -11,9 +11,11 @@ round-trip, unlike the reference's CSV intermediate —
 from __future__ import annotations
 
 import os
+import stat
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
+from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructType
 
 TESTDATA_TABLES = (
     "region",
@@ -71,49 +73,110 @@ def require_path(path: str) -> str:
     return path
 
 
+# Session confs that change the schema parquet inference returns.
+_SCHEMA_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema",
+)
+
+# (realpath, conf values) -> (file identity, raw schema), plus
+# (realpath, "nanos") -> (file identity, events footer probe). A
+# rewrite replaces its path's entry, so the memo holds one per path.
+# Process-wide on purpose: an entry is a pure function of the file and
+# the confs, so any session may reuse it, and a lost race between two
+# threads costs one more resolution, never a stale schema.
+_RESOLVED: dict[tuple, tuple] = {}
+
+
+def _file_identity(path: str) -> tuple:
+    """What changes when a parquet source is rewritten: inode, size and
+    mtime for a file; every part file's name, size and mtime for a
+    Spark-written directory."""
+    st = os.stat(path)
+    if not stat.S_ISDIR(st.st_mode):
+        return (st.st_ino, st.st_size, st.st_mtime_ns)
+    parts = []
+    for root, _, files in os.walk(path):
+        for f in files:
+            fst = os.stat(os.path.join(root, f))
+            rel = os.path.relpath(os.path.join(root, f), path)
+            parts.append((rel, fst.st_size, fst.st_mtime_ns))
+    return tuple(sorted(parts))
+
+
+def _memo(key: tuple, ident: tuple, resolve):
+    hit = _RESOLVED.get(key)
+    if hit is not None and hit[0] == ident:
+        return hit[1]
+    value = resolve()
+    _RESOLVED[key] = (ident, value)
+    return value
+
+
+def _has_nanos_ts(path: str) -> bool:
+    # pyarrow reads the footer driver-side, with no session mutation;
+    # dataset() handles both single files and Spark-written directories
+    import pyarrow.dataset as pads
+
+    ts_type = str(pads.dataset(path, format="parquet").schema.field("ts").type)
+    return ts_type.startswith("timestamp[ns")
+
+
+def read_raw_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """One driver testdata table as parquet stores it, before any
+    normalization; a missing table raises ``FileNotFoundError`` naming
+    it and ``sf_dir``.
+
+    Inferring a parquet schema runs a Spark job that reads the footer,
+    so the schema is resolved once per file, memoized under the file's
+    identity and the session confs that change inference, and passed
+    explicitly on later reads, which start no job. Only the schema is
+    kept, never the DataFrame: each call returns a fresh relation, so
+    two loads of one table carry distinct attribute ids and self-joins
+    resolve.
+
+    ``events.ts`` has appeared as parquet TIMESTAMP(NANOS), which Spark
+    cannot read natively (PARQUET_TYPE_ILLEGAL). For such a file the
+    ``nanosAsLong`` legacy conf is set and ``ts`` arrives as LongType
+    nanos. The conf is consulted again at scan execution, so it cannot
+    be save-restored around the read; in a nanos environment it stays
+    set for the session (the engine's one deliberate session-scoped
+    setting).
+    """
+    path = require_path(os.path.join(sf_dir, f"{name}.parquet"))
+    real = os.path.realpath(path)
+    ident = _file_identity(real)
+    if name == "events" and _memo((real, "nanos"), ident, lambda: _has_nanos_ts(real)):
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    confs = tuple(spark.conf.get(k) for k in _SCHEMA_CONFS)
+    schema = _memo((real, confs), ident, lambda: spark.read.parquet(path).schema)
+    return spark.read.schema(schema).parquet(path)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Load one driver testdata table (TESTDATA.md).
+    """Load one driver testdata table (TESTDATA.md) through
+    ``read_raw_table``.
 
     Timestamp columns are normalized to TIMESTAMP_NTZ wall-clocks
     (functions/timewall.to_wall_ntz): the fixture generator has
     flipped between naive and UTC-adjusted parquet timestamps across
     rounds, and NTZ is the flavor that matches the DuckDB oracle's
-    naive TIMESTAMP under any session timezone.
-
-    ``events.ts`` has additionally appeared as parquet
-    TIMESTAMP(NANOS), which Spark cannot read natively
-    (PARQUET_TYPE_ILLEGAL); with the ``nanosAsLong`` legacy conf it
-    arrives as LongType nanos, which we truncate to a micro
-    timestamp — exactly what DuckDB does when it reads the same file,
-    keeping both engines bucket-identical.
+    naive TIMESTAMP under any session timezone. A TIMESTAMP(NANOS)
+    ``events.ts`` arrives as LongType nanos, which we truncate to a
+    micro timestamp — exactly what DuckDB does when it reads the same
+    file, keeping both engines bucket-identical.
     """
     from ..functions.timewall import to_wall_ntz, wall_ntz_from_micros
 
-    if name == "events":
-        path = os.path.join(sf_dir, "events.parquet")
-        # Probe the footer driver-side (pyarrow, no session mutation)
-        # and only flip the legacy conf when the file actually carries
-        # TIMESTAMP(NANOS). The conf is consulted again at scan
-        # execution, so it cannot be save-restored around the read; in
-        # a nanos environment it stays set for the session (documented
-        # as the engine's one deliberate session-scoped setting).
-        import pyarrow.dataset as pads
-
-        # dataset() handles both single files and Spark-written
-        # directories of part files
-        ts_type = str(pads.dataset(path, format="parquet").schema.field("ts").type)
-        if ts_type.startswith("timestamp[ns"):
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
-        from pyspark.sql import functions as F
-        from pyspark.sql.types import LongType
-
-        if isinstance(df.schema["ts"].dataType, LongType):
-            df = df.withColumn(
-                "ts", wall_ntz_from_micros(F.floor(F.col("ts") / 1000))
-            )
-        return to_wall_ntz(df)
-    return to_wall_ntz(spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet")))
+    df = read_raw_table(spark, sf_dir, name)
+    if name == "events" and isinstance(df.schema["ts"].dataType, LongType):
+        # exact long division, truncating toward zero as DuckDB does
+        # (a double division rounds sub-micro remainders near 1 up)
+        df = df.withColumn("ts", wall_ntz_from_micros(F.expr("ts div 1000")))
+    return to_wall_ntz(df)
 
 
 def load_tables(spark: SparkSession, sf_dir: str, *names: str) -> dict[str, DataFrame]:

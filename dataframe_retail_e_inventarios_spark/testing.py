@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import math
 import os
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 from decimal import Decimal
 
@@ -33,6 +34,23 @@ def duckdb_con(sf_dir: str) -> duckdb.DuckDBPyConnection:
         elif os.path.exists(path):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{path}'")
     return con
+
+
+@contextmanager
+def spark_jobs(spark: SparkSession, group: str):
+    """Yield a list that, when the block exits, holds the ids of the
+    Spark jobs this thread started inside it (a job group read back
+    through the status tracker, which works with the UI off)."""
+    sc = spark.sparkContext
+    ids: list[int] = []
+    sc.setJobGroup(group, group)
+    try:
+        yield ids
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description",
+                     "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
+        ids.extend(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _normalize(df: pd.DataFrame) -> pd.DataFrame:

@@ -4,9 +4,12 @@ at a given scale factor. Usage:
     python tools/selfcheck.py [--json OUT.json] [sf_dir] [name_filter ...]
 
 With --json, writes a driver-shaped report: one row per query with
-rows/schema/hash match flags (oracle-less queries get err=no_oracle),
-so the full registry has committed hard-signal evidence every round
-even when the driver samples a subset.
+rows/schema/hash match flags (oracle-less queries get err=no_oracle)
+and the number of Spark jobs the query started (a job group per query,
+read back through the status tracker), so the full registry has
+committed hard-signal evidence every round even when the driver
+samples a subset. The last line gives the pass: verdict, wall seconds
+and total Spark jobs.
 """
 
 from __future__ import annotations
@@ -19,7 +22,7 @@ sys.path.insert(0, ".")
 
 from dataframe_retail_e_inventarios_spark.registry import oracle_sql, queries
 from dataframe_retail_e_inventarios_spark.session import get_spark
-from dataframe_retail_e_inventarios_spark.testing import compare_query
+from dataframe_retail_e_inventarios_spark.testing import compare_query, spark_jobs
 
 
 def main() -> int:
@@ -61,15 +64,19 @@ def main() -> int:
     qs, oracles = queries(), oracle_sql()
     report: dict[str, dict] = {}
     failed = 0
+    total_jobs = 0
+    t_pass = time.time()
     for name, fn in qs.items():
         if headline is not None and name not in headline:
             continue
         if filters and not any(f in name for f in filters):
             continue
         t0 = time.time()
+        jobs: list[int] = []
         try:
             if name in oracles:
-                res = compare_query(spark, name, fn, oracles[name], sf_dir)
+                with spark_jobs(spark, f"selfcheck:{name}") as jobs:
+                    res = compare_query(spark, name, fn, oracles[name], sf_dir)
                 ok = res.ok
                 print(f"{res}  ({time.time()-t0:.1f}s)", flush=True)
                 report[name] = {
@@ -82,7 +89,8 @@ def main() -> int:
                     "sec": round(time.time() - t0, 2),
                 }
             else:
-                n = fn(spark, sf_dir).count()
+                with spark_jobs(spark, f"selfcheck:{name}") as jobs:
+                    n = fn(spark, sf_dir).count()
                 ok = n >= 0
                 print(f"[ROWS] {name}: {n} rows  ({time.time()-t0:.1f}s)", flush=True)
                 report[name] = {
@@ -106,15 +114,21 @@ def main() -> int:
                 "err": f"{type(e).__name__}: {str(e)[:300]}",
                 "sec": round(time.time() - t0, 2),
             }
+        report[name]["jobs"] = len(jobs)
+        total_jobs += len(jobs)
         failed += (not ok)
+    wall = time.time() - t_pass
     if json_out:
         with open(json_out, "w") as f:
-            json.dump({"sf_dir": sf_dir, "results": report}, f, indent=1)
+            json.dump({"sf_dir": sf_dir, "wall_s": round(wall, 1),
+                       "jobs": total_jobs, "results": report}, f, indent=1)
         print(f"wrote {json_out} ({len(report)} queries)")
     if not report:
         print("\nNO QUERIES MATCHED — check the filter")
         return 2
-    print(f"\n{'ALL OK' if not failed else f'{failed} FAILED'}")
+    verdict = "ALL OK" if not failed else f"{failed} FAILED"
+    print(f"\n{verdict}  {len(report) - failed}/{len(report)}  "
+          f"wall {wall:.1f} s  jobs {total_jobs}")
     return 1 if failed else 0
 
 
